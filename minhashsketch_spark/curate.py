@@ -8,7 +8,8 @@ training-data pipeline actually runs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from .config import PipelineConfig
 from .operators.dedup_corpus import (
@@ -16,6 +17,7 @@ from .operators.dedup_corpus import (
     near_dedup_corpus,
     near_dedup_corpus_best,
 )
+from .operators.robots import filter_robots_disallowed
 from .operators.text import detected_lang_expr, quality_score_expr
 from .operators.verify import est_prefilter_gate
 from .pipeline import _track_auto_root, input_fingerprint, run_pipeline
@@ -60,9 +62,9 @@ def curate(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
     the pipeline stages: it has three downstream consumers (signatures,
     verification's text lookup, keeper anti-join) that must not each
     re-plan the dedup anti-join, and it makes the whole curation resumable
-    per stage. ``with_accounting=False`` skips the step row counts that
-    aren't already free from stage manifests (the counts are monitoring,
-    not semantics).
+    per stage. Step row counts are Observations on jobs that run anyway,
+    but for the one after_quality_lang count that ``with_accounting=False``
+    skips (the counts are monitoring, not semantics).
 
     Stage keys fold an INPUT fingerprint in with the config hash: re-running
     against the same persistent checkpoint dir with a different --input must
@@ -81,19 +83,23 @@ def curate(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
         stage_key += f"-r{input_fingerprint(robots)}"
     store = StageStore(spark, checkpoint_root, stage_key)
 
-    n_input = docs.count() if with_accounting else None
-    if robots is not None:
-        from .operators.robots import filter_robots_disallowed
-
-        docs = filter_robots_disallowed(docs, robots, url_col=url_col)
-
-    if store.exists("exact_dedup"):
+    # a manifest written before the input counts rode the write lacks
+    # them: that stage re-runs once rather than lose them from accounting
+    if store.exists("exact_dedup") and "input" in store.manifest("exact_dedup")["metrics"]:
         exact = store.read("exact_dedup")
     else:
-        exact = store.write("exact_dedup",
-                            exact_dedup_corpus(docs, id_col=url_col,
-                                               text_col=text_col))
-    accounting = {"after_exact_dedup": store.manifest("exact_dedup")["rows"]}
+        # input / after_robots ride the dedup write into its manifest
+        seen = {"input": Observation()}
+        docs = docs.observe(seen["input"], F.count(F.lit(1)).alias("rows"))
+        if robots is not None:
+            seen["after_robots"] = Observation()
+            docs = filter_robots_disallowed(docs, robots, url_col=url_col).observe(
+                seen["after_robots"], F.count(F.lit(1)).alias("rows"))
+        exact = store.write(
+            "exact_dedup", exact_dedup_corpus(docs, id_col=url_col, text_col=text_col),
+            metrics=lambda: {k: o.get["rows"] for k, o in seen.items()})
+    exact_manifest = store.manifest("exact_dedup")
+    accounting = {"after_exact_dedup": exact_manifest["rows"]}
 
     if keeper not in ("min", "best"):
         raise ValueError(f"keeper must be 'min' or 'best', got {keeper!r}")
@@ -115,9 +121,9 @@ def curate(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
     # expressions): joining reduced (url, score) frames back would re-plan
     # the near-dedup anti-join once per join side — three corpus scans +
     # three anti-join shuffles at 100 TB for what is a narrow map
-    curated = near.filter(
-        (quality_score_expr(text_col) >= min_quality)
-        & detected_lang_expr(text_col).isin(*langs))
+    keep = ((quality_score_expr(text_col) >= min_quality)
+            & detected_lang_expr(text_col).isin(*langs))
+    curated = near.filter(keep)
     if benchmark is not None:
         from .operators.decontam import decontaminate
 
@@ -125,14 +131,12 @@ def curate(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
                                 id_col=url_col, text_col=text_col,
                                 bench_text_col=text_col)
     if with_accounting:
-        accounting["input"] = n_input
-        if robots is not None:
-            accounting["after_robots"] = docs.count()
-        accounting["after_near_dedup"] = near.count()
-        accounting["after_quality_lang"] = curated.count() \
-            if benchmark is None else near.filter(
-                (quality_score_expr(text_col) >= min_quality)
-                & detected_lang_expr(text_col).isin(*langs)).count()
+        accounting.update(exact_manifest["metrics"])
+        # one count job; the near-dedup survivors are observed on its way
+        survivors = Observation()
+        accounting["after_quality_lang"] = near.observe(
+            survivors, F.count(F.lit(1)).alias("rows")).filter(keep).count()
+        accounting["after_near_dedup"] = survivors.get["rows"]
         if benchmark is not None:
             accounting["after_decontam"] = curated.count()
     return {"curated": curated, "accounting": accounting,

@@ -24,6 +24,7 @@ url of the component — deterministic, resume-stable (SURVEY.md H7).
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -88,8 +89,11 @@ def _driver_union_find(pairs: DataFrame) -> DataFrame:
         ra, rb = find(a), find(b)
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
-    rows = [(u, find(u)) for u in parent]
-    return pairs.sparkSession.createDataFrame(rows, schema="url string, cluster_id string")
+    # an Arrow table ships as Arrow batches: no PythonRDD, no 2nd worker pool
+    urls = list(parent)
+    return pairs.sparkSession.createDataFrame(pa.table(
+        {"url": pa.array(urls, pa.string()),
+         "cluster_id": pa.array([find(u) for u in urls], pa.string())}))
 
 
 def connected_components(pairs: DataFrame, max_iterations: int = 20,

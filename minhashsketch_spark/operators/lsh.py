@@ -99,8 +99,12 @@ def salt_hot_buckets(bands: DataFrame, cap: int) -> DataFrame:
     )
 
 
-def candidate_pairs(signatures: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """signatures -> distinct (url_a, url_b) candidate pairs, url_a < url_b."""
+def candidate_pairs(signatures: DataFrame, cfg: PipelineConfig,
+                    n_signatures: int | None = None) -> DataFrame:
+    """signatures -> distinct (url_a, url_b) candidate pairs, url_a < url_b.
+
+    ``n_signatures``: a known row count of ``signatures`` (from a stage
+    manifest) skips the count that sizes the band self-join."""
     from ..partitioning import eager_if_python
 
     bands = explode_bands(signatures)
@@ -123,9 +127,11 @@ def candidate_pairs(signatures: DataFrame, cfg: PipelineConfig) -> DataFrame:
     # salted frame would re-run its sizes join — never do that.
     from ..partitioning import _plan_node_names
 
-    salted_nodes = _plan_node_names(salted._jdf.queryExecution().optimizedPlan())
-    if all(n == "LogicalRDD" or n.startswith(("Project", "Filter"))
-           for n in salted_nodes):
+    if n_signatures is not None:
+        n_band_rows = n_signatures * cfg.bands
+    elif all(n == "LogicalRDD" or n.startswith(("Project", "Filter"))
+             for n in _plan_node_names(
+                 salted._jdf.queryExecution().optimizedPlan())):
         n_band_rows = salted.count()
     else:
         n_band_rows = signatures.count() * cfg.bands

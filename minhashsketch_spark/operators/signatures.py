@@ -40,6 +40,28 @@ SIG_SCHEMA = ("url string, n_shingles bigint, sig array<bigint>, "
               "bands array<bigint>, sig_key bigint")
 
 
+def utf8_views(arr) -> Iterator[np.ndarray]:
+    """Zero-copy uint8 views of the rows of an Arrow string array, sliced
+    from its (offsets, data) buffers: no per-row Python str/bytes object
+    is ever made. A null row yields an empty view (empty shingle set)."""
+    import pyarrow as pa
+
+    n = len(arr)
+    if n == 0:
+        return
+    bufs = arr.buffers()
+    odt = np.int64 if pa.types.is_large_string(arr.type) else np.int32
+    offs = np.frombuffer(bufs[1], dtype=odt)[arr.offset:arr.offset + n + 1]
+    data = (np.frombuffer(bufs[2], dtype=np.uint8)
+            if len(bufs) > 2 and bufs[2] is not None else np.empty(0, np.uint8))
+    valid = ~np.asarray(arr.is_null()) if arr.null_count else None
+    for i in range(n):
+        if valid is not None and not valid[i]:
+            yield data[:0]
+        else:
+            yield data[offs[i]:offs[i + 1]]
+
+
 def compute_signatures(docs: DataFrame, cfg: PipelineConfig,
                        url_col: str = "url", text_col: str = "text",
                        keep_text: bool = False) -> DataFrame:
@@ -72,25 +94,8 @@ def compute_signatures(docs: DataFrame, cfg: PipelineConfig,
             n = batch.num_rows
             sigs = np.empty((n, t), dtype=np.uint64)
             counts = np.empty(n, dtype=np.int64)
-            # zero-copy byte views over the Arrow string buffers: slice the
-            # (offsets, data) buffers directly — no per-row Python str/bytes
-            # object is ever materialized (texts are already UTF-8 in Arrow)
-            tarr = texts.combine_chunks() if isinstance(texts, pa.ChunkedArray) else texts
-            bufs = tarr.buffers()
-            odt = np.int64 if pa.types.is_large_string(tarr.type) else np.int32
-            offs = np.frombuffer(bufs[1], dtype=odt)[
-                tarr.offset:tarr.offset + n + 1] if n else np.zeros(1, odt)
-            data = (np.frombuffer(bufs[2], dtype=np.uint8)
-                    if len(bufs) > 2 and bufs[2] is not None else np.empty(0, np.uint8))
-            if tarr.null_count:
-                valid = ~np.asarray(tarr.is_null())
-            else:
-                valid = None
-            for i in range(n):
-                if valid is not None and not valid[i]:
-                    xs = distinct_shingles(b"", k)
-                else:
-                    xs = distinct_shingles(data[offs[i]:offs[i + 1]], k)
+            for i, view in enumerate(utf8_views(texts)):
+                xs = distinct_shingles(view, k)
                 counts[i] = xs.shape[0]
                 sigs[i] = minhash_matrix(xs, a_par, b_par)
             if n:
@@ -105,14 +110,13 @@ def compute_signatures(docs: DataFrame, cfg: PipelineConfig,
             band_col = pa.ListArray.from_arrays(
                 pa.array(np.arange(0, (n + 1) * bands, bands, dtype=np.int32)),
                 pa.array(bk.reshape(-1)))
-            arrays = [urls.combine_chunks() if isinstance(urls, pa.ChunkedArray) else urls,
-                      pa.array(counts), sig_col, band_col, pa.array(sk)]
+            arrays = [urls, pa.array(counts), sig_col, band_col, pa.array(sk)]
             names = ["url", "n_shingles", "sig", "bands", "sig_key"]
             if keep_text:
                 # zero-copy: the input batch's own string buffer (downcast
                 # the rare large_string batch to match the declared schema)
-                arrays.append(tarr.cast(pa.string())
-                              if pa.types.is_large_string(tarr.type) else tarr)
+                arrays.append(texts.cast(pa.string())
+                              if pa.types.is_large_string(texts.type) else texts)
                 names.append("text")
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
@@ -137,27 +141,12 @@ def shingle_counts(docs: DataFrame, cfg: PipelineConfig,
 
     def gen(batches) -> "Iterator[pa.RecordBatch]":
         for batch in batches:
-            urls = batch.column(0)
-            texts = batch.column(1)
-            n = batch.num_rows
-            counts = np.empty(n, dtype=np.int64)
-            tarr = texts.combine_chunks() if isinstance(texts, pa.ChunkedArray) else texts
-            bufs = tarr.buffers()
-            odt = np.int64 if pa.types.is_large_string(tarr.type) else np.int32
-            offs = np.frombuffer(bufs[1], dtype=odt)[
-                tarr.offset:tarr.offset + n + 1] if n else np.zeros(1, odt)
-            data = (np.frombuffer(bufs[2], dtype=np.uint8)
-                    if len(bufs) > 2 and bufs[2] is not None else np.empty(0, np.uint8))
-            valid = ~np.asarray(tarr.is_null()) if tarr.null_count else None
-            for i in range(n):
-                if valid is not None and not valid[i]:
-                    counts[i] = 0
-                else:
-                    counts[i] = distinct_shingles(data[offs[i]:offs[i + 1]], k).shape[0]
-            yield pa.RecordBatch.from_arrays(
-                [urls.combine_chunks() if isinstance(urls, pa.ChunkedArray) else urls,
-                 pa.array(counts)],
-                names=["url", "n_shingles"])
+            counts = np.fromiter(
+                (distinct_shingles(view, k).shape[0]
+                 for view in utf8_views(batch.column(1))),
+                dtype=np.int64, count=batch.num_rows)
+            yield pa.RecordBatch.from_arrays([batch.column(0), pa.array(counts)],
+                                             names=["url", "n_shingles"])
 
     from ..partitioning import ensure_parallelism
 

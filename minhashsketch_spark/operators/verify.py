@@ -10,10 +10,11 @@ Jaccard.
   (UINT64_MAX padding matches itself) is preserved: two empty docs have
   all-UINT64_MAX signatures, which compare equal.
 * **Exact Jaccard** (north_star: "exact Jaccard verification filters
-  pairs") recomputes distinct shingle sets only for docs that appear in at
-  least one candidate pair (a left-semi join — <<1% of the corpus at scale)
-  and intersects them JVM-side via ``array_intersect`` (hash-set based,
-  O(n)).
+  pairs") is ONE ``mapInArrow`` pass over the (est-gated) pair spine joined
+  to both texts: it shingles zero-copy views of the UTF-8 buffers (the
+  bytes the signature UDF shingles) and intersects the sorted sets in
+  NumPy. Nothing is materialized between the estimate and the output: the
+  job that writes the verified rows computes them.
 """
 
 from __future__ import annotations
@@ -28,35 +29,32 @@ from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..core.shingles import distinct_shingles
+from .signatures import utf8_views
 
 
-# candidate-pair frames at or under this row count are broadcast into the
-# attach joins (pairs are <<1% of the corpus by LSH design — the broadcast
-# keeps the heavy signature/shingle frames UNSHUFFLED, guide §3.1/§8); above
-# it the joins fall back to the shuffle plans (scale-safe default).  1M pair
-# rows ~ 60 MB framed — comfortably within executor broadcast budgets.
+# pair frames at or under this row count are broadcast into the attach
+# joins (pairs are <<1% of the corpus by LSH design, so the signature and
+# text frames stay UNSHUFFLED, guide §3.1/§8); above it the joins fall back
+# to the shuffle plans. 1M pair rows ~ 60 MB framed.
 BROADCAST_PAIR_LIMIT = 1_000_000
-# under THIS count the b-side shuffle_hash hints are dropped too: with a
-# tiny pair set every attach input is tiny, the planner's own stats produce
-# the all-broadcast zero-Exchange plan, and a forced hash-join would ADD
-# two exchanges of pure scheduling latency (measured ~+0.5-1 s/query at
-# sf0.1). The hints only pay once the fat (pair x payload) intermediate is
-# big enough that an estimate-driven plan would sort or mis-broadcast it.
+# under THIS count the b-side shuffle_hash hints are dropped too: the
+# planner's own stats give the all-broadcast zero-Exchange plan, and a
+# forced hash join would ADD two exchanges of pure scheduling latency
+# (measured ~+0.5-1 s/query at sf0.1).
 DIRECT_JOIN_PAIR_LIMIT = 50_000
 
 
 def est_prefilter_gate(cfg: PipelineConfig) -> float:
-    """Safe est_sim pre-gate for exact verification: ``threshold - 6
-    sigma`` where sigma is the t-sample binomial std of the estimator at
-    p = threshold. A pair whose exact jaccard is >= threshold has
-    P(est < gate) <= ~3e-7 (Hoeffding; ~1e-9 by the normal
-    approximation), so filtering
-    candidates below the gate BEFORE the shingle recompute + intersect
-    cannot change any jaccard>=threshold or is_dup output (the gate is
-    strictly below threshold). At the flagship t=128/thr=0.7 the gate is
-    ~0.457 and kills the ~98% of LSH band collisions that are random
-    shingle matches from a small vocabulary; at small t the margin widens
-    automatically (t=16 -> gate ~0.01, i.e. no risky pruning)."""
+    """Est_sim pre-gate for exact verification: ``threshold - 6 sigma``,
+    sigma the t-sample binomial std of the estimator at p = threshold. An
+    estimate is a mean of t Bernoulli(J) matches, so a pair with exact
+    jaccard J >= threshold falls below the gate with probability <=
+    exp(-72 threshold (1 - threshold)) (Hoeffding): a per-pair tail of
+    2.7e-7 at the flagship threshold 0.7. is_dup rows (est_sim >=
+    threshold) are never dropped. At t=128/thr=0.7 the gate is ~0.457 and
+    kills the ~98% of LSH band collisions that are random shingle matches
+    from a small vocabulary; at small t the margin widens (t=16 -> ~0.01;
+    t=8 clamps to 0, i.e. no gate)."""
     import math
 
     sigma = math.sqrt(cfg.threshold * (1.0 - cfg.threshold) / cfg.t)
@@ -133,32 +131,60 @@ def minhash_estimate_m(pairs: DataFrame, signatures: DataFrame,
         gen, schema="url_a string, url_b string, est_sim double")
 
 
-def shingle_sets_for(docs: DataFrame, urls: DataFrame, cfg: PipelineConfig,
-                     url_col: str = "url", text_col: str = "text",
-                     broadcast_urls: bool = False) -> DataFrame:
-    """Distinct shingle-hash sets, computed only for ``urls`` (semi join).
+def pair_url_set(pairs: DataFrame, small: bool, url_col: str = "url") -> DataFrame:
+    """The urls of a (materialized) pair frame as a left-semi build side:
+    broadcast when ``small``, so the probed scan is never shuffled (a
+    broadcast build side needs no distinct); else distinct."""
+    urls = pairs.select(F.col("url_a").alias(url_col)).unionByName(
+        pairs.select(F.col("url_b").alias(url_col)))
+    return F.broadcast(urls) if small else urls.distinct()
 
-    ``broadcast_urls``: the url set is known-small — broadcast the semi-join
-    build side so the corpus scan is never shuffled (guide §3.1)."""
-    k = cfg.k
-    url_set = urls.select(F.col("url").alias(url_col)).distinct()
-    if broadcast_urls:
-        url_set = F.broadcast(url_set)
-    needed = docs.join(url_set, on=url_col, how="left_semi")
 
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            outs = []
-            for text in pdf[text_col].values:
-                xs = distinct_shingles((text or "").encode("utf-8", "surrogatepass"), k)
-                outs.append(xs.view(np.int64))
-            yield pd.DataFrame({"url": pdf[url_col].values, "shingles": outs})
+def _ratio(num: np.ndarray, den: np.ndarray) -> np.ndarray:
+    """num / den, 1.0 where den == 0 (IEEE division, as the JVM's)."""
+    out = np.ones_like(num)
+    np.divide(num, den, out=out, where=den > 0)
+    return out
 
-    # no ensure_parallelism here: `needed` sits downstream of the semi-join
-    # shuffle, so it already carries >= shuffle.partitions partitions (and
-    # probing .rdd on an AQE join plan can execute its stages eagerly)
-    return needed.select(F.col(url_col), F.col(text_col)).mapInPandas(
-        gen, schema="url string, shingles array<bigint>")
+
+def _exact_scores(k: int, threshold: float, with_containment: bool):
+    """The one Arrow pass, as (function, output DDL): (url_a, url_b,
+    est_sim, text_a, text_b) -> (url_a, url_b, est_sim, jaccard, is_dup
+    [, containment_a, containment_b]). Shingle sets are cached per batch
+    by text: a doc repeated within one batch is shingled once."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    out = ["url_a string", "url_b string", "est_sim double",
+           "jaccard double", "is_dup boolean"]
+    if with_containment:
+        out += ["containment_a double", "containment_b double"]
+    names = [c.split()[0] for c in out]
+
+    def shingled(col, cache: dict) -> Iterator[np.ndarray]:
+        for view in utf8_views(col):
+            key = view.tobytes()
+            if key not in cache:
+                cache[key] = distinct_shingles(view, k)
+            yield cache[key]
+
+    def gen(batches) -> "Iterator[pa.RecordBatch]":
+        for batch in batches:
+            cache: dict[bytes, np.ndarray] = {}
+            sets_a, sets_b = (list(shingled(batch.column(c), cache)) for c in (3, 4))
+            size_a, size_b = (np.array([x.shape[0] for x in sets], dtype=np.float64)
+                              for sets in (sets_a, sets_b))
+            inter = np.array([np.intersect1d(a, b, assume_unique=True).shape[0]
+                              for a, b in zip(sets_a, sets_b)], dtype=np.float64)
+            arrays = batch.columns[:3] + [
+                pa.array(_ratio(inter, size_a + size_b - inter)),
+                pc.greater_equal(batch.column(2), pa.scalar(threshold))]
+            if with_containment:
+                arrays += [pa.array(_ratio(inter, size_a)),
+                           pa.array(_ratio(inter, size_b))]
+            yield pa.RecordBatch.from_arrays(arrays, names=names)
+
+    return gen, ", ".join(out)
 
 
 def verified_pairs(pairs: DataFrame, signatures: DataFrame, docs: DataFrame,
@@ -167,7 +193,8 @@ def verified_pairs(pairs: DataFrame, signatures: DataFrame, docs: DataFrame,
                    checkpoint_sigs: bool = True,
                    with_containment: bool = False,
                    checkpoint_pairs: bool = True,
-                   est_gate: float | None = None) -> DataFrame:
+                   est_gate: float | None = None,
+                   n_pairs: int | None = None) -> DataFrame:
     """Full verification: est_sim (reference estimator) + exact jaccard.
 
     Output: (url_a, url_b, est_sim, jaccard, is_dup) where is_dup applies
@@ -187,99 +214,56 @@ def verified_pairs(pairs: DataFrame, signatures: DataFrame, docs: DataFrame,
     caller): localCheckpoint'ing e.g. a full index's signatures here would
     copy the whole index into executor storage. Likewise
     ``checkpoint_pairs=False`` for a parquet-backed candidate table.
+    ``n_pairs``: the known row count of ``pairs`` (a stage manifest or an
+    earlier count) — skips the count that sizes the joins.
 
-    Join strategy (guide §3.1/§8): the pair set is <<1% of the corpus by
-    LSH design, and after the eager materialization its exact size is one
-    cheap count away — when it is under ``BROADCAST_PAIR_LIMIT`` rows the
-    pair spine is BROADCAST into every attach join, so the heavy frames
-    (signatures, shingle sets) are never shuffled for the a-side attaches,
-    and the b-side attaches hash-join without sorting the array payloads.
-    Above the limit every join falls back to the previous shuffle plans.
+    Join strategy (guide §3.1/§8): texts enter through a left-semi join to
+    the pair urls, so only paired docs' texts can be shuffled. Under
+    ``BROADCAST_PAIR_LIMIT`` pairs the url set, the pair spine and the
+    gated estimate are BROADCAST, so docs, signatures and a-side texts are
+    never shuffled; past ``DIRECT_JOIN_PAIR_LIMIT`` each b-side attach of
+    a known-size spine hash-joins (shuffled once, never sorted). Above the
+    broadcast limit every join falls back to the shuffle plans.
 
     ``est_gate``: optional est_sim pre-filter applied BEFORE the exact
-    verification (shingle recompute + intersect) — pairs below the gate
-    are dropped from the OUTPUT entirely, so only pass a gate when every
-    downstream consumer filters on ``jaccard >= threshold`` or ``is_dup``
-    and the gate is a safe margin below threshold (use
-    ``est_prefilter_gate(cfg)``; see its tail-bound argument). The gate is
-    the single biggest verification win on small-vocabulary corpora: ~98%
-    of LSH candidates are random band collisions whose exact jaccard is
-    nowhere near threshold, and gating them skips their shingle recompute
-    and array_intersect (measured 8.5 -> 3.4 s same-session at 50k docs /
-    127k candidates). Callers that need sub-threshold rows (containment
-    mining, estimator calibration) must leave it None.
+    verification; pairs below it are dropped from the OUTPUT, so pass one
+    only when every consumer filters on ``jaccard >= threshold`` or
+    ``is_dup``. With ``est_prefilter_gate(cfg)`` no is_dup row is lost,
+    and a pair with jaccard >= threshold only within the per-pair tail
+    bound of ``est_prefilter_gate`` (<= 3e-7 at threshold 0.7). Callers
+    that need sub-threshold rows (containment mining, estimator
+    calibration) must leave it None.
     """
-    # both stages consume ``signatures``/``sets_df`` twice (a-side, b-side);
-    # EAGER localCheckpoint so the UDFs run exactly once — a lazy persist
-    # lets the two join sides race to compute the same partitions. In the
-    # full pipeline these arrive as parquet-checkpointed tables anyway.
+    # ``signatures`` is consumed twice (a-side, b-side): EAGER
+    # localCheckpoint so its UDF runs exactly once — a lazy persist lets
+    # the two join sides race to compute the same partitions
     if checkpoint_sigs:
         signatures = signatures.localCheckpoint()
     if checkpoint_pairs:
         pairs = pairs.localCheckpoint()
-    # the count is ~free: pairs is either just-materialized executor storage
-    # or a parquet stage table whose count comes from footer metadata
-    n_pairs = pairs.count()
+    if n_pairs is None:
+        n_pairs = pairs.count()
     small = n_pairs <= BROADCAST_PAIR_LIMIT
     # tiny pair sets keep the planner's own zero-Exchange all-broadcast
     # plan: a forced hash join would only add exchanges (see gate comment)
     hash_b = small and n_pairs > DIRECT_JOIN_PAIR_LIMIT
     est = minhash_estimate(pairs, signatures, cfg, broadcast_pairs=small,
                            hash_join_b_side=hash_b)
-    # a clamped/zero gate filters nothing — take the ungated plan instead
-    # of paying an extra materialize+count for no pruning
-    if est_gate is not None and est_gate > 0.0:
+    # a clamped/zero gate filters nothing — keep the ungated plan
+    gated = est_gate is not None and est_gate > 0.0
+    if gated:
         est = est.filter(F.col("est_sim") >= F.lit(est_gate))
-        if small:
-            # EAGER: the gated estimate is the new (far smaller) pair
-            # spine — materializing it runs the estimate job once and
-            # makes the surviving-pair count exact for the attach-plan
-            # gates below. Bounded: pre-gate pairs are already under
-            # BROADCAST_PAIR_LIMIT here, so the checkpointed copy is too.
-            est = est.localCheckpoint()
-            n_pairs = est.count()
-            small = n_pairs <= BROADCAST_PAIR_LIMIT
-            hash_b = small and n_pairs > DIRECT_JOIN_PAIR_LIMIT
-            spine = est
-        else:
-            # above the broadcast limit nothing pair-scale may enter
-            # executor storage (localCheckpoint is non-reliable): keep the
-            # gate as an inline filter before the attach joins (est is
-            # consumed once, so no recompute) and derive the shingle urls
-            # from the pair superset — extra shingle rows, same output
-            spine = pairs
-    else:
-        spine = pairs
-    all_urls = (spine.select(F.col("url_a").alias("url"))
-                .unionByName(spine.select(F.col("url_b").alias("url"))).distinct())
-    sets_df = shingle_sets_for(docs, all_urls, cfg, url_col, text_col,
-                               broadcast_urls=small).localCheckpoint()
-    sh_a = sets_df.select(F.col("url").alias("url_a"), F.col("shingles").alias("sh_a"))
-    sh_b = sets_df.select(F.col("url").alias("url_b"), F.col("shingles").alias("sh_b"))
+    # only texts of paired docs enter the attaches
+    needed = docs.join(pair_url_set(pairs, small, url_col), url_col, "left_semi")
+    text_a = needed.select(F.col(url_col).alias("url_a"), F.col(text_col).alias("text_a"))
+    text_b = needed.select(F.col(url_col).alias("url_b"), F.col(text_col).alias("text_b"))
     if small:
-        # est is pair-sized and light (urls + two doubles): broadcasting it
-        # keeps sh_a unshuffled; past DIRECT_JOIN_PAIR_LIMIT the second
-        # attach hash-joins so the fat (pair x shingle-array) intermediate
-        # is shuffled once, never sorted
         est = F.broadcast(est)
-        if hash_b:
-            sh_b = sh_b.hint("shuffle_hash")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    out = (
-        est.join(sh_a, "url_a").join(sh_b, "url_b")
-        .withColumn("jaccard",
-                    F.when(union > 0, inter.cast("double") / union.cast("double"))
-                    .otherwise(F.lit(1.0)))
-        .withColumn("is_dup", F.col("est_sim") >= F.lit(cfg.threshold))
-    )
-    cols = ["url_a", "url_b", "est_sim", "jaccard", "is_dup"]
-    if with_containment:
-        for side, col in (("a", "sh_a"), ("b", "sh_b")):
-            out = out.withColumn(
-                f"containment_{side}",
-                F.when(F.size(col) > 0,
-                       inter.cast("double") / F.size(col).cast("double"))
-                .otherwise(F.lit(1.0)))
-        cols += ["containment_a", "containment_b"]
-    return out.select(*cols)
+        # the gated spine's size is unknown (counting it costs a job), so
+        # its b-side attach is left to AQE's runtime sizes, not forced
+        if hash_b and not gated:
+            text_b = text_b.hint("shuffle_hash")
+    gen, schema = _exact_scores(cfg.k, cfg.threshold, with_containment)
+    return (est.join(text_a, "url_a").join(text_b, "url_b")
+            .select("url_a", "url_b", "est_sim", "text_a", "text_b")
+            .mapInArrow(gen, schema=schema))

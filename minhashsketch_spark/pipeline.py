@@ -75,6 +75,14 @@ def input_fingerprint(docs: DataFrame) -> str:
     return hashlib.sha256(payload.encode()).hexdigest()[:12]
 
 
+def verified_stage(est_gate: float | None) -> str:
+    """The gate changes only the verified stage, so it is folded into that
+    name alone; ``repr`` keeps every bit, so no two gates share a table."""
+    if est_gate is None or est_gate <= 0.0:
+        return "verified"
+    return f"verified-g{float(est_gate)!r}"
+
+
 def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
                  checkpoint_root: str | None = None,
                  url_col: str = "url", text_col: str = "text",
@@ -115,12 +123,7 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
         _track_auto_root(checkpoint_root)
     key = stage_key or cfg.config_hash()
     store = StageStore(spark, checkpoint_root, key) if checkpoint_root else None
-    # the gate changes only the verified stage's contents: fold it into
-    # THAT stage name, so the expensive gate-independent
-    # signatures/candidates stages (and the bit-identical clusters) stay
-    # shared between gated and ungated runs on the same checkpoint_root
-    gate_sfx = (f"-g{est_gate:.6f}"
-                if est_gate is not None and est_gate > 0.0 else "")
+    verified_name = verified_stage(est_gate)
     timings: dict[str, float] = {}
     # Arrow batch sizing for the signature UDF — the analogue of the
     # reference's CHUNKS sizing (src/MinhashSketch.cu:304-330)
@@ -151,9 +154,15 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
         return {"buckets": row["buckets"], "max_bucket": row["max_bucket"],
                 "buckets_over_cap": row["buckets_over_cap"]}
 
-    candidates = stage("candidates", lambda: candidate_pairs(signatures, cfg),
-                       metrics=cand_metrics)
-    verified = stage(f"verified{gate_sfx}",
+    def manifest(name: str) -> dict:
+        # row counts and stage metrics are free from the manifests
+        return store.manifest(name) if store is not None else {}
+
+    candidates = stage(
+        "candidates", lambda: candidate_pairs(
+            signatures, cfg, n_signatures=manifest("signatures").get("rows")),
+        metrics=cand_metrics)
+    verified = stage(verified_name,
                      # signatures + candidates are parquet stage tables here:
                      # re-planning them is ~free, so skip verified_pairs'
                      # executor-storage copies (localCheckpoint) of both
@@ -161,15 +170,13 @@ def run_pipeline(spark: SparkSession, docs: DataFrame, cfg: PipelineConfig,
                                             url_col, text_col,
                                             checkpoint_sigs=False,
                                             checkpoint_pairs=False,
-                                            est_gate=est_gate),
+                                            est_gate=est_gate,
+                                            n_pairs=manifest("candidates").get("rows")),
                      # counted inside the lineage job — the clusters stage
                      # reads it from the manifest instead of re-counting
                      extra_aggs={"n_dup_pairs":
                                  F.sum(F.col("is_dup").cast("long"))})
-    n_edges = None
-    if store is not None and store.exists(f"verified{gate_sfx}"):
-        m = store.manifest(f"verified{gate_sfx}").get("metrics", {})
-        n_edges = m.get("n_dup_pairs")
+    n_edges = manifest(verified_name).get("metrics", {}).get("n_dup_pairs")
     # clusters are gate-INDEPENDENT (the gate preserves every is_dup row
     # bit-identically), so the stage name stays unsuffixed and is shared
     # between gated and ungated runs

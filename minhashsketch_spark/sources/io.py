@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -128,27 +129,38 @@ class StageStore:
     def read(self, stage: str) -> DataFrame:
         return read_table(self.spark, self._path(stage))
 
-    def write(self, stage: str, df: DataFrame, metrics: dict | None = None,
+    def write(self, stage: str, df: DataFrame,
+              metrics: dict | Callable[[], dict] | None = None,
               extra_aggs: dict | None = None) -> DataFrame:
-        """``extra_aggs``: named aggregate Columns (e.g. a dup-pair count)
-        computed in the SAME job as the per-partition lineage counts —
-        downstream stages read them from the manifest instead of paying an
-        extra count() over the checkpointed table."""
-        from pyspark.sql import functions as F
+        """Write ``df`` as the stage table + manifest; return it read back.
+        On the parquet path the write is the only job: ``rows`` and
+        ``partition_rows`` (rows per written file — the per-partition
+        lineage) come from the footers, and the read-back takes the
+        writer's schema; an Iceberg table costs one more counting job.
+        ``extra_aggs`` (named aggregate Columns) ride the write as an
+        ``Observation``; ``metrics`` is a dict, or a callable run after the
+        write (it may read Observations of that job)."""
+        import pyarrow.parquet as pq
+        from pyspark.sql import Observation
 
         path = self._path(stage)
+        obs = None
+        if extra_aggs:
+            obs = Observation()
+            df = df.observe(obs, *[expr.alias(k) for k, expr in extra_aggs.items()])
         write_table(df, path)
-        out = read_table(self.spark, path)
-        # per-partition lineage: row counts per partition of the written
-        # table (north_rule: "per-partition lineage + metrics") — skew in
-        # these numbers is the first thing to look at when a stage is slow
-        aggs = [F.count("*").alias("count")]
-        aggs += [expr.alias(f"_x_{k}") for k, expr in (extra_aggs or {}).items()]
-        per = (out.groupBy(F.spark_partition_id().alias("pid")).agg(*aggs)
-               .orderBy("pid").collect())
-        ppart = [r["count"] for r in per]
-        extra_totals = {k: int(sum(r[f"_x_{k}"] or 0 for r in per))
-                        for k in (extra_aggs or {})}
+        if os.path.exists(os.path.join(path, "_SUCCESS")):  # written as parquet
+            out = self.spark.read.schema(df.schema).parquet(path)
+            ppart = [pq.read_metadata(os.path.join(path, f)).num_rows
+                     for f in sorted(os.listdir(path))
+                     if f.endswith(".parquet") and not f.startswith((".", "_"))]
+        else:  # an Iceberg table: one job counts rows per read partition
+            out = read_table(self.spark, path)
+            ppart = [r["count"] for r in out.groupBy(F.spark_partition_id().alias("p"))
+                     .count().orderBy("p").collect()]
+        extra_totals = {k: int(v or 0) for k, v in obs.get.items()} if obs else {}
+        if callable(metrics):
+            metrics = metrics()
         manifest = {
             "stage": stage,
             "config_hash": self.config_hash,

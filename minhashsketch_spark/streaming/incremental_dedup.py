@@ -33,7 +33,8 @@ from ..operators.cross_dedup import (
     cross_candidate_pairs_indexed,
 )
 from ..operators.signatures import compute_signatures
-from ..operators.verify import verified_pairs
+from ..operators.verify import (BROADCAST_PAIR_LIMIT, est_prefilter_gate,
+                                pair_url_set, verified_pairs)
 from .ingest import DOCS_SCHEMA
 
 
@@ -113,15 +114,10 @@ def dedup_batch_against_index(spark: SparkSession, batch_df: DataFrame,
     # index union, re-shuffling every index row's signature and text bytes
     # per micro-batch for a crash-window that only matters on the rows that
     # actually join (guide §2.3 — shuffle the candidate slice, not the
-    # corpus). The pair urls are batch-scale: broadcast the semi-join build
-    # side under the same gate verified_pairs uses.
-    from ..operators.verify import BROADCAST_PAIR_LIMIT
-
-    pair_urls = (cand.select(F.col("url_a").alias("url"))
-                 .unionByName(cand.select(F.col("url_b").alias("url")))
-                 .distinct())
-    if cand.count() <= BROADCAST_PAIR_LIMIT:
-        pair_urls = F.broadcast(pair_urls)
+    # corpus). The url set is verified_pairs' own, so its broadcast is
+    # reused by the text attach instead of built twice.
+    n_cand = cand.count()
+    pair_urls = pair_url_set(cand, n_cand <= BROADCAST_PAIR_LIMIT)
     # a url may legitimately appear on BOTH the index and delta side of the
     # union during the compaction crash window (folded into _sigs, delta
     # not yet cleared); signatures/texts are deterministic per url, so the
@@ -137,8 +133,6 @@ def dedup_batch_against_index(spark: SparkSession, batch_df: DataFrame,
         all_docs = all_docs.unionByName(d)
     all_docs = (all_docs.join(pair_urls, "url", "left_semi")
                 .dropDuplicates(["url"]))
-    from ..operators.verify import est_prefilter_gate
-
     # the emitted pairs feed jaccard>=threshold / is_dup consumers only
     # (the entry query, compaction, the tests), so the 6-sigma est
     # pre-gate is safe: sub-gate band collisions never get their shingles
@@ -148,7 +142,7 @@ def dedup_batch_against_index(spark: SparkSession, batch_df: DataFrame,
     ver = verified_pairs(cand, all_sigs, all_docs, cfg,
                          checkpoint_sigs=False,  # batch ckpt'd, rest parquet
                          checkpoint_pairs=False,  # materialized above
-                         est_gate=est_gate)
+                         est_gate=est_gate, n_pairs=n_cand)
     return ver.select(F.col("url_a").alias("url_new"),
                       F.col("url_b").alias("url_idx"),
                       "est_sim", "jaccard", "is_dup")

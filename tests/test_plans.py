@@ -341,6 +341,78 @@ def test_verified_pairs_small_path_broadcasts_pair_spine(spark, monkeypatch):
     assert "SortMergeJoin" not in plan, plan
 
 
+def _physical(df):
+    """The physical plan; an adaptive plan's initial plan, where the
+    Exchanges are."""
+    plan = df._jdf.queryExecution().executedPlan()
+    return plan.initialPlan() if plan.nodeName() == "AdaptiveSparkPlan" else plan
+
+
+def _names(node) -> set:
+    out = node.output()
+    return {out.apply(i).name() for i in range(out.size())}
+
+
+def _children(node) -> list:
+    return [node.children().apply(i) for i in range(node.children().size())]
+
+
+def _nodes(node):
+    yield node
+    for child in _children(node):
+        yield from _nodes(child)
+
+
+def _unrestricted_text_shuffles(node, shuffle=None) -> list:
+    """Shuffle Exchanges that carry a text column read straight from the
+    docs: no left-semi join to the pair urls sits between them and the
+    scan."""
+    if node.nodeName().endswith("Join") and node.joinType().toString() == "LeftSemi":
+        shuffle = None
+    elif node.nodeName() == "Exchange" and _names(node) & {"text", "text_a", "text_b"}:
+        shuffle = shuffle or node
+    if not _children(node):
+        return [shuffle.toString()] if shuffle and "text" in _names(node) else []
+    return [x for c in _children(node) for x in _unrestricted_text_shuffles(c, shuffle)]
+
+
+def test_verified_pairs_shuffles_only_paired_texts(spark, monkeypatch):
+    """The text attaches read the docs through a left-semi join to the
+    candidate urls, so no Exchange ever moves the whole corpus text: on
+    the tiny path, on the mid-size path (b-side text attach hash-joined)
+    and on the gated mid-size path. A gated spine has no known size, so
+    its b-side text attach is left to the planner: the only forced
+    ShuffledHashJoin is the signature attach."""
+    from minhashsketch_spark.operators import verify as V
+    from minhashsketch_spark.operators.lsh import candidate_pairs
+    from minhashsketch_spark.operators.signatures import compute_signatures
+    from minhashsketch_spark.sources.corpus import corpus_dataframe
+
+    cfg = PipelineConfig(k=9, m=1, t=16, bands=4, rows=4, seed=1, threshold=0.7)
+    docs, _ = corpus_dataframe(spark, n_docs=60, seed=4)
+    sigs = compute_signatures(docs, cfg).localCheckpoint()
+    pairs = candidate_pairs(sigs, cfg).localCheckpoint()
+
+    def physical(**kw):
+        return _physical(V.verified_pairs(pairs, sigs, docs, cfg, checkpoint_sigs=False,
+                                          checkpoint_pairs=False, **kw))
+
+    def hash_joins(plan):
+        return [n for n in _nodes(plan) if n.nodeName() == "ShuffledHashJoin"]
+
+    tiny = physical()
+    assert not _unrestricted_text_shuffles(tiny)
+    monkeypatch.setattr(V, "DIRECT_JOIN_PAIR_LIMIT", 0)
+    mid = physical()
+    assert not _unrestricted_text_shuffles(mid)
+    assert any("text_b" in _names(n) for n in hash_joins(mid))
+    gated = physical(est_gate=0.3)
+    assert not _unrestricted_text_shuffles(gated)
+    # the only forced hash join left is the signature b-side attach
+    (only,) = hash_joins(gated)
+    assert "sig_b" in _names(only) and "text_b" not in _names(only)
+
+
 def test_embedding_near_dup_attach_is_broadcast(spark):
     """r6: under the vector-table gate the exact-cosine attaches must be
     broadcast EQUI joins — the candidate set is never sort-merge-joined
